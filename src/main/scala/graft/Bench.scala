@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.engine.{Release, Session}
 object Bench {
 
   private def median(xs: Seq[Double]): Double = {
@@ -30,40 +32,26 @@ object Bench {
       .trim.split("\\s+")(8).toLong
     catch { case _: Throwable => -1L }
 
-  /** Unpersist every RDD still registered after a query's own cleanup
-    * (catalog.clearCache only drops DataFrame/table cache entries —
-    * RDD-level persists from localCheckpoint survive it). Returns the
-    * swept count so bench.json can NAME the leaker instead of only
-    * reporting a battery-wide leak total. */
-  private def sweepPersistentRdds(spark: SparkSession,
-                                  blocking: Boolean = false): Int = {
-    val leftover = spark.sparkContext.getPersistentRDDs
-    leftover.values.foreach(_.unpersist(blocking = blocking))
-    leftover.size
+  /** Warm up codegen/JIT and FS metadata so the first timed query
+    * doesn't absorb session fixed costs. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // ≥3 iterations because single runs on a shared box cannot tell a
     // real 2× regression from scheduler noise (measured round 6→7:
     // identical code, 3.8× spread on q20). SPARK_GRAFT_ITERS=1 for
     // quick single-query iteration loops.
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // ERROR (not WARN): the final stdout line must be the headline JSON,
     // and async WARN chatter (e.g. MapPartitionsRDD localCheckpoint
     // notes from non-blocking unpersists) raced past the println in
     // rounds 7/9/10 and truncated the driver's tail capture
-    spark.sparkContext.setLogLevel("ERROR")
-    // warm up codegen/JIT + FS metadata so the first timed query
-    // doesn't absorb session fixed costs
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
+    val spark = Session("ERROR")
+    warmUp(spark, sfDir)
     // optional args = query-name subset, for single-query iteration;
     // SPARK_GRAFT_SCALING_ONLY=1 skips the battery and runs just the
     // scaling harness (for iterating on a scaling curve without paying
@@ -116,20 +104,17 @@ object Bench {
             spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum)
           // queries may cache internally; drop those entries so
           // successive timings are independent and memory stays flat
-          spark.catalog.clearCache()
-          val s = sweepPersistentRdds(spark)
+          val s = Release.sweep(spark)
           if (s > 0) swept(name) = swept.getOrElse(name, 0) + s
         }
       }
       pass += 1
     }
     // after the final pass + per-query sweeps nothing may stay
-    // persisted; nonzero here means a leak the sweep itself missed
-    spark.catalog.clearCache()
-    val leakedAfterBattery = spark.sparkContext.getPersistentRDDs.size
+    // persisted; nonzero here means a leak the sweep itself missed.
     // blocking: all unpersist chatter must complete BEFORE the headline
     // prints, so no async log line can land after it in the tail capture
-    sweepPersistentRdds(spark, blocking = true)
+    val leakedAfterBattery = Release.sweep(spark, blocking = true)
     val ok = selected.collect {
       case (k, _) if times(k).nonEmpty && !failures.contains(k) => k -> times(k).toSeq
     }
@@ -175,8 +160,7 @@ object Bench {
       if (scalingOnly || (args.nonEmpty && !args.contains("q90_stored_index_dedup"))) ""
       else try {
         val (sv, rd) = graft.queries.Round11.q90PhaseTimings(spark, sfDir)
-        spark.catalog.clearCache()
-        sweepPersistentRdds(spark)
+        Release.sweep(spark)
         f""","q90_save_sec":$sv%.3f,"q90_read_sec":$rd%.3f"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] q90 phase timing failed: ${e.getMessage}")

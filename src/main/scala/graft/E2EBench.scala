@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Session
 import graft.etl.MoviePipeline
 import graft.ml.Recommender
 import graft.util.Timing
@@ -71,14 +72,7 @@ object E2EBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(1072255L)
     val work = args.lift(1).getOrElse("/tmp/graft_e2e")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val (_, genS) = Timing.timed(generate(spark, rows, s"$work/csv"))
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Session
 
 /** Plan auditor: prints `explain("formatted")` for the named queries
   * (or all) so scan pushdown (PushedFilters/ReadSchema), join
@@ -8,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val wanted = if (args.nonEmpty) args.toSet else SparkEntry.queries.keySet
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted(n) }

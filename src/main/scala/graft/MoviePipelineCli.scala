@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.engine.Session
 import graft.etl.MoviePipeline
 import graft.ml.Recommender
 import graft.util.Timing
@@ -20,15 +19,7 @@ object MoviePipelineCli {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: MoviePipelineCli <input_csv> <output_dir> [id [k]]")
     val Array(input, output) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-movie-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val (_, secs) = Timing.timed {
       val raw = MoviePipeline.readCsv(spark, input)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.{Release, Session}
+
 /** Scaling-curve harness, one section per curve, runnable in-process
   * (legacy) or — the committed-artifact path — in a FRESH JVM per
   * section via [[ScalingChild]].
@@ -144,11 +146,6 @@ object Scaling {
     if (section == "dedup") "points"
     else if (section == "inc") "incremental_dedup" else section
 
-  private def sweep(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
-
   /** Run one section; returns (jsonArrayBody, truncated). Points are
     * skipped (truncated=true) once `budgetSec` of wall-clock inside
     * this call is spent — a contended box degrades to fewer points
@@ -275,7 +272,7 @@ object Scaling {
         case _ => ()
       }
     } catch { case _: Throwable => () }
-    sweep(spark)
+    Release.sweep(spark)
 
     section match {
       case "dedup" =>
@@ -288,9 +285,9 @@ object Scaling {
             val nDocs = df.count()
             val (p, tp) = timed(graft.ops.Dedup.minhashPairs(df, shingleSize = 3,
               bands = 10, rowsPerBand = 5, maxJaccardDist = 0.4).count())
-            sweep(spark)
+            Release.sweep(spark)
             val (f, tf) = timed(graft.ops.Dedup.deduplicate(df, maxJaccardDist = 0.4).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val perK = if (p > 0) tp / (p / 1000.0) else 0.0
             points += f"""{"x":$x,"docs":$nDocs,"q31_pairs":$p,"q31_sec":$tp%.2f,"q31_sec_per_1k_pairs":$perK%.3f,"q55_survivors":$f,"q55_sec":$tf%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
@@ -328,7 +325,7 @@ object Scaling {
             val e = if (x == 1) edges1 else edgesX(x)
             val nEdges = e.count()
             val (v, t) = timed(graft.ops.PageRank.ranks(e, iterations = iters).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             points += f"""{"x":$x,"iters":$iters,"edges":$nEdges,"vertices":$v,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
           } else truncated = true
@@ -347,7 +344,7 @@ object Scaling {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (spans, t) = timed(graft.ops.Packing.packSequences(df, budget = 256L).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             points += f"""{"x":$x,"docs":$nDocs,"span_rows":$spans,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
           } else truncated = true
@@ -373,7 +370,7 @@ object Scaling {
                 graft.ops.TextStats.qualityScore(col("text")))
               graft.ops.Ranks.withQuantileBucket(ranked, "lang", buckets = 10).count()
             }
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             points += f"""{"x":$x,"docs":$nDocs,"rows":$rows,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
           } else truncated = true
@@ -393,7 +390,7 @@ object Scaling {
             val nDocs = df.count()
             val (p, t) = timed(graft.ops.Winnowing.overlapPairs(df,
               k = 3, w = 4, minShared = 2L, maxDf = 64L).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val perK = if (p > 0) t / (p / 1000.0) else 0.0
             points += f"""{"x":$x,"docs":$nDocs,"pairs":$p,"sec":$t%.2f,"sec_per_1k_pairs":$perK%.3f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
@@ -416,10 +413,10 @@ object Scaling {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (rows, t) = timed(graft.ops.SparseSim.tfidfTopK(df, k = 5).count())
-            sweep(spark)
+            Release.sweep(spark)
             val (rowsC, tC) = timed(
               graft.ops.SparseSim.tfidfTopK(df, k = 5, maxDf = 8L).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             points += f"""{"x":$x,"docs":$nDocs,"rows":$rows,"sec":$t%.2f,"capped_maxdf":8,"capped_rows":$rowsC,"capped_sec":$tC%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
           } else truncated = true
@@ -445,13 +442,13 @@ object Scaling {
             val stats = graft.ops.Similarity.ivfProbeStats(df,
               nCents = nCents, nProbe = 4).collect()(0)
             val candPairs = stats.getLong(2)
-            sweep(spark)
+            Release.sweep(spark)
             val (_, tAssign) = timed(graft.ops.Similarity.ivfAssign(df,
               nCents = nCents, nProbe = 4).count())
-            sweep(spark)
+            Release.sweep(spark)
             val (rows, t) = timed(graft.ops.Similarity.ivfHardNegatives(df,
               k = 5, nCents = nCents, nProbe = 4).count())
-            sweep(spark)
+            Release.sweep(spark)
             // x30 only: the GLOBAL-salted and SELECTIVE-salted
             // spellings of the SAME mining run (numSalts = 8,
             // result-identical) beside the unsalted wall. r18
@@ -469,11 +466,11 @@ object Scaling {
                 val (_, tS) = timed(graft.ops.Similarity.ivfHardNegatives(
                   df, k = 5, nCents = nCents, nProbe = 4,
                   numSalts = 8).count())
-                sweep(spark)
+                Release.sweep(spark)
                 val (_, tSel) = timed(graft.ops.Similarity.ivfHardNegatives(
                   df, k = 5, nCents = nCents, nProbe = 4,
                   numSalts = 8, selectiveSalting = true).count())
-                sweep(spark)
+                Release.sweep(spark)
                 f""","salts":8,"salted_sec":$tS%.2f,"selective_sec":$tSel%.2f"""
               } else ""
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
@@ -554,7 +551,7 @@ object Scaling {
             val (rowsR, tR) = timed(
               graft.ops.Similarity.adcTopKBatchRouted(codesCell, books,
                 cents, probes, k = 10, nProbe = 4).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val candRows = nVecs * 16L
             val perM = if (candRows > 0) t / (candRows / 1e6) else 0.0
@@ -580,7 +577,7 @@ object Scaling {
             val (rows, t) = timed(graft.ops.TextStats.backoffSurprisal(
               df.filter(col("doc_id") % 2 === 1),
               df.filter(col("doc_id") % 2 === 0)).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             points += f"""{"x":$x,"docs":$nDocs,"scored_docs":$rows,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
           } else truncated = true
@@ -607,7 +604,7 @@ object Scaling {
             }
             val (nodes, tLpa) = timed(graft.ops.LabelProp.propagate(
               pairs, rounds = 4, aCol = "doc_a", bCol = "doc_b").count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val perK = if (nEdges > 0) tLpa / (nEdges / 1000.0) else 0.0
             points += f"""{"x":$x,"docs":$nDocs,"edges":$nEdges,"edges_sec":$tEdges%.2f,"nodes":$nodes,"lpa_sec":$tLpa%.2f,"lpa_sec_per_1k_edges":$perK%.3f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
@@ -648,10 +645,10 @@ object Scaling {
             }
             val (adm, ti) = timed(graft.ops.Dedup.incrementalDeduplicateIndexed(
               batchSlice, idx, maxJaccardDist = 0.4).count())
-            sweep(spark)
+            Release.sweep(spark)
             val (surv, tf) = timed(graft.ops.Dedup.deduplicate(
               c.unionByName(batchSlice), maxJaccardDist = 0.4).count())
-            sweep(spark)
+            Release.sweep(spark)
             val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             points += f"""{"x":$x,"corpus":$nCorpus,"index_sec":$tIdx%.2f,"admitted":$adm,"inc_sec":$ti%.2f,"full_survivors":$surv,"full_sec":$tf%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
           } else truncated = true
@@ -679,19 +676,11 @@ object ScalingChild {
     val section = args.headOption.getOrElse(
       sys.error("usage: ScalingChild <section>"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val budget = sys.env.getOrElse("SPARK_GRAFT_SCALING_BUDGET", "900").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same warmup as the battery: codegen/JIT + FS metadata, so the
-    // first point doesn't absorb session fixed costs (the curves
-    // compare points WITHIN this JVM; the cold start is constant)
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
+    val spark = Session("ERROR")
+    // the battery's warm-up, so the first point doesn't absorb session
+    // fixed costs (the curves compare points WITHIN this JVM)
+    Bench.warmUp(spark, sfDir)
     val (json, truncated) = Scaling.runSection(spark, sfDir, section, budget)
     spark.stop()
     println(s"GRAFT_SCALING_FRAGMENT $section $truncated $json")

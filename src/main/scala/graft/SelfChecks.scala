@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.util.Json
 
 /** Verify-time invariant checks for the queries whose row SELECTION no
   * SQL oracle can re-derive (seeded MLlib fits, LSH recall, sketch
@@ -39,18 +40,10 @@ object SelfChecks {
       "als_planted_blocks" -> guard(alsPlantedBlocks(spark)))
   }
 
-  def toJson(results: Seq[(String, (Boolean, String))]): String = {
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  def toJson(results: Seq[(String, (Boolean, String))]): String =
     results.map { case (name, (pass, detail)) =>
-      s""""${esc(name)}": {"pass": $pass, "detail": "${esc(detail)}"}"""
+      s"""${Json.quote(name)}: {"pass": $pass, "detail": ${Json.quote(detail)}}"""
     }.mkString("{", ", ", "}")
-  }
 
   private def out(spark: SparkSession, outDir: String, name: String): DataFrame =
     spark.read.parquet(s"$outDir/$name")

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Session
 
 /** Local twin of the driver's t1 smoke: run `SparkEntry.entry` and
   * print its row count (must be > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val df = SparkEntry.entry(spark)
     df.show(5, truncate = false)
     println(s"ENTRY_ROWS=${df.count()}")

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Session, Tables}
 import graft.ops.{Chunking, Classifier, Dedup, Packing, Splits, TextStats}
 import graft.util.Timing
 
@@ -26,14 +26,7 @@ object TrainDataBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.headOption.getOrElse("/tmp/graft_traindata")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val docs = Tables.documents(spark, sfDir)
     val nRaw = docs.count()

@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.engine.Session
+import graft.util.Json
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,14 +13,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
@@ -28,18 +24,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // SEMI-oracle substitution: a query whose row SELECTION is
     // recall/seed-dependent but whose metric columns are exact (q33,
     // q43) declares SQL that re-reads the ids THIS run emitted (the
@@ -52,7 +36,7 @@ object Verify {
     val absOut = Paths.get(outDir).toAbsolutePath.toString.replace("'", "''")
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => subset.isEmpty || subset(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__GRAFT_OUT__", absOut))}" }
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v.replace("__GRAFT_OUT__", absOut))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (subset.nonEmpty) { spark.stop(); return } // local iteration: skip self-checks

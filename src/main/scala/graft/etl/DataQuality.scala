@@ -29,8 +29,4 @@ object DataQuality {
     }
     df.select(exprs: _*)
   }
-
-  /** Row counts before/after a transformation (reference cells 20/24). */
-  def retention(before: DataFrame, after: DataFrame): (Long, Long) =
-    (before.count(), after.count())
 }

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH, MinHashLSHModel}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,9 +11,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *   - exact: hash groupBy on the content key — one shuffle, map-side
   *     partial agg; at 100 TB group on a fingerprint (cheap long)
   *     instead of raw text to keep exchange rows narrow.
-  *   - MinHash+LSH: shingle → binary vector → minhash bands →
-  *     bucket-join. approxSimilarityJoin only joins colliding buckets,
-  *     so cost tracks the number of true near-dup pairs, not n².
+  *   - MinHash+LSH: shingle → minhash signature → bands →
+  *     bucket-join. The band join only pairs colliding buckets, so
+  *     cost tracks the number of true near-dup pairs, not n².
   *   - SimHash: 64-bit signature + 16-bit band buckets → Hamming
   *     verify. Signature is one map pass; candidate generation is a
   *     4-way band shuffle (self-join per band, like MinHash bands).
@@ -549,58 +548,20 @@ object Dedup {
         coefs.map(_._1).toArray, coefs.map(_._2).toArray, p)).as("sig"))
   }
 
-  /** MLlib-based MinHash variant (reference-parity path: binary
-    * CountVectorizer → MinHashLSH → approxSimilarityJoin). Slower than
-    * the native banded join — its bucket key is a boxed Vector — but
-    * kept as the API-compatible MLlib surface. */
-  def minhashPairsMLlib(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", shingleSize: Int = 2,
-      numHashTables: Int = 8, maxJaccardDist: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    val shingled = docs.select(col(idCol),
-      wordNgrams(TextStats.tokens(col(textCol)), shingleSize).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-    val cv = new CountVectorizer()
-      .setInputCol("shingles").setOutputCol("features").setBinary(true)
-      .fit(shingled)
-    val vecs = cv.transform(shingled)
-      // MinHashLSH requires at least one non-zero entry; keep join
-      // rows narrow (id + vector only) — the bucket-join shuffles
-      // every hash collision, so row width is the cost multiplier.
-      .filter(vecNonEmpty(col("features")))
-      .select(col(idCol), col("features"))
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    val model = lsh.fit(vecs)
-    model.approxSimilarityJoin(vecs, vecs, maxJaccardDist, "jaccard_dist").toDF()
-      .select(
-        col(s"datasetA.$idCol").as("doc_a"),
-        col(s"datasetB.$idCol").as("doc_b"),
-        col("jaccard_dist"))
-      .filter(col("doc_a") < col("doc_b"))
-  }
-
-  private def vecNonEmpty(v: Column): Column = {
-    val toArr = org.apache.spark.ml.functions.vector_to_array(v)
-    aggregate(toArr, lit(0.0), (acc, x) => acc + x) > 0
-  }
-
   // ---------------------------------------------------------- simhash
   /** Per-document 64-bit SimHash signature. */
-  def simhashSignatures(spark: SparkSession, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    SimHash.register(spark)
+  def simhashSignatures(docs: DataFrame,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
       SimHash.simhash64(TextStats.tokens(col(textCol))).as("simhash"))
-  }
 
   /** Candidate pairs within `maxHamming` bits, generated by exact
     * match on any of the four 16-bit bands (pigeonhole: ≤3 differing
     * bits ⇒ at least one band identical), verified with bit_count. */
-  def simhashCandidates(spark: SparkSession, docs: DataFrame,
+  def simhashCandidates(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3): DataFrame = {
-    val sigs = simhashSignatures(spark, docs, idCol, textCol)
+    val sigs = simhashSignatures(docs, idCol, textCol)
     val banded = sigs.select(col(idCol), col("simhash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),

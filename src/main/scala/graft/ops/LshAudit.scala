@@ -97,7 +97,6 @@ object LshAudit {
   def detectorAgreement(docs: DataFrame, bands: Int = 8, rowsPerBand: Int = 3,
       maxHamming: Int = 12, shingleSize: Int = 3, sampleMod: Long = 8L,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
     val (ca, cb) = coefs(bands * rowsPerBand)
 
     val toks = filter(split(col(textCol), "\\s+"), t => length(t) > lit(0))
@@ -134,7 +133,7 @@ object LshAudit {
 
     // ---- detector B: banded SimHash (≤ maxHamming), directed, ------
     // restricted to the gram-able universe
-    val sh0 = Dedup.simhashCandidates(spark, docs, idCol, textCol, maxHamming)
+    val sh0 = Dedup.simhashCandidates(docs, idCol, textCol, maxHamming)
       .select(col("doc_a"), col("doc_b"))
     val shU = sh0
       .join(inUniverse.select(col("__id").as("doc_a")), Seq("doc_a"))

@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** 64-bit SimHash of a token array.
@@ -59,11 +58,8 @@ object SimHash {
     ofTokens(it)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHashExpr(exprs.head), "built-in")
-
-  def simhash64(c: Column): Column = call_function("graft_simhash", c)
+  def simhash64(c: Column): Column =
+    graft.engine.Columns.ofExpr(SimHashExpr(graft.engine.Columns.exprOf(c)))
 }
 
 /** array<string> → long SimHash (see [[SimHash]]). */

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
+import graft.engine.Release
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * All scalar math is Catalyst higher-order functions (zip_with /
@@ -515,29 +517,6 @@ object Similarity {
     unit.unpersist(blocking = false)
     assigned.unpersist(blocking = false)
     result
-  }
-
-  /** MLlib-based near-dup variant (kept as the API-compatible MLlib
-    * surface): Euclidean similarity join on L2-normalized vectors
-    * (distance ≤ d ⇔ cosine ≥ 1 - d²/2). */
-  def lshNearDupPairs(embeddings: DataFrame,
-      maxL2Dist: Double = 0.5, idCol: String = "vec_id",
-      vecCol: String = "embedding", bucketLength: Double = 1.0,
-      numHashTables: Int = 6, seed: Long = 42L): DataFrame = {
-    // norm as an attribute first — a raw l2Norm(vec) inside the lambda
-    // would re-fold the whole array once per element
-    val normed = embeddings
-      .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("nrm"))
-      .select(col(idCol),
-        transform(col(vecCol), x => x.cast(DoubleType) / col("nrm")).as("unit"))
-    val (withVec, model) = fitLsh(normed, vecCol = "unit",
-      bucketLength = bucketLength, numHashTables = numHashTables, seed = seed)
-    model.approxSimilarityJoin(withVec, withVec, maxL2Dist, "l2_dist").toDF()
-      .select(
-        col(s"datasetA.$idCol").as("vec_a"),
-        col(s"datasetB.$idCol").as("vec_b"),
-        col("l2_dist"))
-      .filter(col("vec_a") < col("vec_b"))
   }
 
   /** ANN via LSH bucket pruning: neighbors of the vector with the given
@@ -1079,7 +1058,7 @@ object Similarity {
         val audit = SkewJoin.skewKeyAudit(cands.select(col("__ccell")),
           "__ccell").select(col("__ccell"))
         val hot = audit.collect().map(_.getLong(0)).toSeq
-        dropLocalCheckpoints(audit)
+        Release.dropLocalCheckpoints(audit)
         if (hot.isEmpty)
           pairCols(queries.join(cands, col("__pcell") === col("__ccell")))
         else {
@@ -1220,35 +1199,9 @@ object Similarity {
       .crossJoin(broadcast(routed.agg(count(lit(1)).as("n_vecs"))))
       .select(col("n_vecs"), col("n_cells_used"), col("cand_pairs"))
     val materialized = out.localCheckpoint(true)
-    dropLocalCheckpoint(routed)
+    Release.dropLocalCheckpoint(routed)
     materialized
   }
-
-  /** Release the RDD blocks behind an eager localCheckpoint once no
-    * live plan depends on them (the [[graft.text.Bpe]] helper's
-    * pattern) — safe ONLY when every dependent frame has been
-    * materialized onto its own storage, because a dropped checkpoint
-    * cannot recompute. No-op on any other plan shape. */
-  private def dropLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** [[dropLocalCheckpoint]] over EVERY LogicalRDD inside the plan —
-    * for releasing an eagerly-checkpointed INTERMEDIATE when the only
-    * handle left is a frame derived from it (e.g. [[SkewJoin
-    * .skewKeyAudit]]'s internal counts checkpoint, reachable only
-    * through the audit verdict frame). Same safety contract: callable
-    * only once every consumer of those blocks has been materialized
-    * (collected), because a dropped checkpoint cannot recompute. */
-  private def dropLocalCheckpoints(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** PRODUCT-QUANTIZATION codes (Jégou et al. TPAMI'11): the vector
     * is split into `m` contiguous subspaces; each subvector is

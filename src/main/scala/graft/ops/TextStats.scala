@@ -110,19 +110,6 @@ object TextStats {
       lit(0L),
       (acc, c) => pmod(acc * lit(31L) + c, lit(1000000007L)))
 
-  /** One-pass stats projection over a documents table. */
-  def profile(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs.select(
-      col("doc_id"),
-      tokenCount(t).as("n_tokens"),
-      charCount(t).as("n_chars_measured"),
-      avgTokenLen(t).as("avg_token_len"),
-      stopwordCount(t).as("n_stopwords"),
-      qualityScore(t).as("quality"),
-      predictedLang(t).as("lang_pred"),
-      bagFingerprint(t).as("fingerprint"))
-  }
   /** GPT-2-pre-tokenizer-style classes: contraction suffixes, letter
     * runs, digit runs, punctuation runs. No lookbehind and leftmost
     * alternation only, so Java regex (Spark codegen) and RE2 (the

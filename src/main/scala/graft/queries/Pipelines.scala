@@ -127,7 +127,7 @@ object Pipelines {
     * bands, and a character-wise Hamming count. An exact cross-check of
     * the custom codegen expression against a second implementation. */
   private def q32(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashCandidates(s, Tables.documents(s, dir), maxHamming = 12)
+    Dedup.simhashCandidates(Tables.documents(s, dir), maxHamming = 12)
       .orderBy("doc_a", "doc_b")
 
   private val q32Sql =

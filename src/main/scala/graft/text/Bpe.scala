@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.engine.Release
+
 /** Byte-Pair-Encoding merge TRAINING + application.
   *
   * [[Subword]] (q104) applies a frequency-derived piece vocabulary;
@@ -101,20 +103,6 @@ object Bpe {
     * (bounded: one row per round), merge applied as a codegen'd
     * `aggregate` fold on the symbol column. Stops early if the corpus
     * runs out of adjacent pairs (every word fully merged). */
-  /** Release a superseded localCheckpoint's blocks: a checkpointed
-    * Dataset's plan is a LogicalRDD over the persisted RDD, and
-    * Dataset.unpersist only clears cacheManager entries — the
-    * RDD-level persist needs the RDD handle. Without this, every
-    * merge round pins a word/sym frame at MEMORY_AND_DISK until
-    * driver GC (q221 runs four fits — ~60 rounds — per battery pass).
-    * No-op on any other plan shape. */
-  private def dropLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Codepoint-wise string order — equals Spark's UTF8String (UTF-8
     * byte) ordering, which the distributed trainer's orderBy uses for
     * the (count DESC, left, right) tie-break. Java String.compareTo is
@@ -272,12 +260,14 @@ object Bpe {
                 concat(slice(acc, lit(1), size(acc) - 1), array(lit(p + q))))
               .otherwise(concat(acc, array(x))))
         val next = words.withColumn("sym", merged).localCheckpoint(true)
-        dropLocalCheckpoint(words) // next is eagerly materialized
+        // next is eagerly materialized; without the drop every round
+        // pins its word/sym frame until driver GC (q221: ~60 rounds)
+        Release.dropLocalCheckpoint(words)
         words = next
       }
       round += 1
     }
-    dropLocalCheckpoint(words) // only `learned` leaves this method
+    Release.dropLocalCheckpoint(words) // only `learned` leaves this method
     new BpeMerges(learned.toIndexedSeq)
   }
 

@@ -1,9 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,12 +30,8 @@ case class LemmatizeExpr(child: Expression) extends UnaryExpression {
 }
 
 object TextFunctions {
-  /** Register engine SQL functions in the session's function registry
-    * (idempotent). Needed once per SparkSession before `lemmatize`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lemmatize", exprs => LemmatizeExpr(exprs.head), "built-in")
-
-  /** Column form of the lemmatizer (requires [[register]] first). */
-  def lemmatize(c: Column): Column = call_function("graft_lemmatize", c)
+  /** Column form of the lemmatizer; needs no registered SQL function,
+    * so it works in any session. */
+  def lemmatize(c: Column): Column =
+    graft.engine.Columns.ofExpr(LemmatizeExpr(graft.engine.Columns.exprOf(c)))
 }

@@ -25,7 +25,6 @@ object TextPrep {
     * join → blank-filter → tokenize → lowercase+strip non-alnum →
     * drop empties → lemmatize → stop-word filter. */
   def prepare(spark: SparkSession, df: DataFrame): DataFrame = {
-    TextFunctions.register(spark)
     val stops = typedLit(stopWords)
     df.withColumn("tags_str", concat_ws(" ", col("tags")))
       .filter(trim(col("tags_str")) =!= "")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,61 +10,45 @@ class EngineSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("GraftExtensions registers SQL functions at session build time") {
-    // getOrCreate would return the shared test session; clear the
-    // active/default handles so a fresh session (same SparkContext)
-    // is built WITH the extensions, then restore.
-    val prior = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.engine.GraftExtensions())
-        .getOrCreate()
-      val r = ext.sql(
-        "SELECT graft_lemmatize('testing') AS l, graft_simhash(array('a','b')) AS s")
-        .collect().head
-      assert(r.getString(0) === "test")
-      assert(r.getLong(1) === graft.ops.SimHash.ofTokens(Iterator("a", "b")))
-      val v = ext.sql(
-        """SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
-          |       graft_sqdist(array(0.0D, 0.0D), array(3.0D, 4.0D)) AS s""".stripMargin)
-        .collect().head
-      assert(v.getDouble(0) === 11.0)
-      assert(v.getDouble(1) === 25.0)
-      assert(ext.sql("SELECT graft_zorder(3, 3) AS z").collect().head.getLong(0) === 15L)
-      // the aggregate surface: per-group top-2 by score in pure SQL
-      ext.sql("SELECT * FROM VALUES ('a', 1L, 5.0D), ('a', 2L, 9.0D), " +
-        "('a', 3L, 7.0D), ('b', 4L, 1.0D) AS t(g, id, o)")
-        .createOrReplaceTempView("tk_in")
-      val tk = ext.sql(
-        """SELECT g, e.id FROM (
-          |  SELECT g, graft_top_k(o, id, 2) AS tk FROM tk_in GROUP BY g
-          |) LATERAL VIEW explode(tk) AS e ORDER BY g, e.ord DESC""".stripMargin)
-        .collect().map(r0 => (r0.getString(0), r0.getLong(1))).toSeq
-      assert(tk === Seq(("a", 2L), ("a", 3L), ("b", 4L)))
-      // frequent-items candidate aggregate: k=1 over x,x,x,y,z leaves x
-      ext.sql("SELECT * FROM VALUES ('x'),('x'),('x'),('y'),('z') AS t(w)")
-        .createOrReplaceTempView("hh_in")
-      val fi = ext.sql("SELECT graft_frequent_items(w, 1) AS c FROM hh_in")
-        .collect().head.getSeq[String](0)
-      assert(fi === Seq("x"))
-      // bloom probe: build a blob via the API, probe it from SQL (named
-      // parameter carries the binary)
-      val blob = Seq(1L, 2L, 3L).toDF("h")
-        .agg(graft.ops.BloomFns.bloomAgg(col("h"), 1 << 10, 5))
-        .collect().head.getAs[Array[Byte]](0)
-      val probes = ext.sql(
-        "SELECT graft_bloom_contains(:b, 2L) AS hit, " +
-          "graft_bloom_contains(:b, 424242L) AS miss",
-        Map("b" -> blob)).collect().head
-      assert(probes.getBoolean(0) === true)
-      assert(probes.getBoolean(1) === false)
-    } finally {
-      SparkSession.setActiveSession(prior)
-      SparkSession.setDefaultSession(prior)
-    }
+    val r = spark.sql(
+      "SELECT graft_lemmatize('testing') AS l, graft_simhash(array('a','b')) AS s")
+      .collect().head
+    assert(r.getString(0) === "test")
+    assert(r.getLong(1) === graft.ops.SimHash.ofTokens(Iterator("a", "b")))
+    val v = spark.sql(
+      """SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
+        |       graft_sqdist(array(0.0D, 0.0D), array(3.0D, 4.0D)) AS s""".stripMargin)
+      .collect().head
+    assert(v.getDouble(0) === 11.0)
+    assert(v.getDouble(1) === 25.0)
+    assert(spark.sql("SELECT graft_zorder(3, 3) AS z").collect().head.getLong(0) === 15L)
+    // the aggregate surface: per-group top-2 by score in pure SQL
+    spark.sql("SELECT * FROM VALUES ('a', 1L, 5.0D), ('a', 2L, 9.0D), " +
+      "('a', 3L, 7.0D), ('b', 4L, 1.0D) AS t(g, id, o)")
+      .createOrReplaceTempView("tk_in")
+    val tk = spark.sql(
+      """SELECT g, e.id FROM (
+        |  SELECT g, graft_top_k(o, id, 2) AS tk FROM tk_in GROUP BY g
+        |) LATERAL VIEW explode(tk) AS e ORDER BY g, e.ord DESC""".stripMargin)
+      .collect().map(r0 => (r0.getString(0), r0.getLong(1))).toSeq
+    assert(tk === Seq(("a", 2L), ("a", 3L), ("b", 4L)))
+    // frequent-items candidate aggregate: k=1 over x,x,x,y,z leaves x
+    spark.sql("SELECT * FROM VALUES ('x'),('x'),('x'),('y'),('z') AS t(w)")
+      .createOrReplaceTempView("hh_in")
+    val fi = spark.sql("SELECT graft_frequent_items(w, 1) AS c FROM hh_in")
+      .collect().head.getSeq[String](0)
+    assert(fi === Seq("x"))
+    // bloom probe: build a blob via the API, probe it from SQL (named
+    // parameter carries the binary)
+    val blob = Seq(1L, 2L, 3L).toDF("h")
+      .agg(graft.ops.BloomFns.bloomAgg(col("h"), 1 << 10, 5))
+      .collect().head.getAs[Array[Byte]](0)
+    val probes = spark.sql(
+      "SELECT graft_bloom_contains(:b, 2L) AS hit, " +
+        "graft_bloom_contains(:b, 424242L) AS miss",
+      Map("b" -> blob)).collect().head
+    assert(probes.getBoolean(0) === true)
+    assert(probes.getBoolean(1) === false)
   }
 
   test("salted join returns exactly the rows of the plain join under skew") {

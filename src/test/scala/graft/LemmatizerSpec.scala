@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.text.{Lemmatizer, TextFunctions}
+import graft.engine.Session
+import graft.ops.Dedup
+import graft.text.{Lemmatizer, TextFunctions, TextPrep}
 
 class LemmatizerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -45,16 +48,49 @@ class LemmatizerSpec extends AnyFunSuite {
 
   test("catalyst expression matches the pure function (codegen path)") {
     import spark.implicits._
-    TextFunctions.register(spark)
     val words = Seq("cats", "running", "was", "movies", "x", "spell")
     val got = words.toDF("w")
       .select(TextFunctions.lemmatize(col("w")).as("l"))
       .collect().map(_.getString(0)).toSeq
     assert(got === words.map(Lemmatizer.lemma))
+
+    // A plain session without GraftExtensions (the benchmark harness
+    // builds one) must give the same rows: the column API builds its
+    // expressions directly instead of naming a SQL function.
+    val plain = {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      try SparkSession.builder().getOrCreate()
+      finally {
+        SparkSession.setActiveSession(spark)
+        SparkSession.setDefaultSession(spark)
+      }
+    }
+    assert(plain ne spark)
+    intercept[AnalysisException](plain.sql("SELECT graft_lemmatize('x')").collect())
+    def rows(s: SparkSession): (Seq[Row], Seq[Row]) = {
+      val tags = s.createDataFrame(Seq((1L, Seq("Running", "cats!")),
+        (2L, Seq("the", "Children")), (3L, Seq("  "))))
+        .toDF("id", "tags")
+      val docs = s.createDataFrame(Seq((0L, "the cat sat"), (1L, "the cat sat"),
+        (2L, "dogs were running home"))).toDF("doc_id", "text")
+      (TextPrep.prepare(s, tags).orderBy("id").collect().toSeq,
+        Dedup.simhashSignatures(docs).orderBy("doc_id").collect().toSeq)
+    }
+    val (prepped, sigs) = rows(spark)
+    assert(prepped.map(r => r.getSeq[String](r.fieldIndex("tags_lemmatized"))) ===
+      Seq(Seq("run", "cat"), Seq("child")))
+    assert(rows(plain) === (prepped, sigs))
   }
 
   test("expression usable from SQL after registration") {
-    TextFunctions.register(spark)
+    // every program and test session comes from engine.Session, whose
+    // extensions register the SQL names; nothing else registers them
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+    assert(spark.sparkContext.master === s"local[${Session.cpus}]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === Session.cpus.toString)
     val r = spark.sql("SELECT graft_lemmatize('testing') AS l").collect().head
     assert(r.getString(0) === "test")
   }

@@ -57,21 +57,14 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs.exists(r => r.getAs[Long]("doc_a") == 0L && r.getAs[Long]("doc_b") == 1L))
   }
 
-  test("MLlib minhash variant agrees on the exact duplicate") {
-    val pairs = Dedup.minhashPairsMLlib(docs, maxJaccardDist = 0.5).collect()
-    val dup = pairs.find(r => r.getAs[Long]("doc_a") == 0L && r.getAs[Long]("doc_b") == 2L)
-    assert(dup.isDefined)
-    assert(dup.get.getAs[Double]("jaccard_dist") === 0.0)
-  }
-
   test("simhash: identical docs collide, near-dups within few bits") {
-    val sigs = Dedup.simhashSignatures(spark, docs).collect()
+    val sigs = Dedup.simhashSignatures(docs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
     assert(sigs(0L) === sigs(2L))
     val hamming01 = java.lang.Long.bitCount(sigs(0L) ^ sigs(1L))
     val hamming03 = java.lang.Long.bitCount(sigs(0L) ^ sigs(3L))
     assert(hamming01 < hamming03, "one-word edit must be closer than disjoint text")
-    val cands = Dedup.simhashCandidates(spark, docs, maxHamming = 3).collect()
+    val cands = Dedup.simhashCandidates(docs, maxHamming = 3).collect()
     assert(cands.exists(r => r.getAs[Long]("doc_a") == 0L && r.getAs[Long]("doc_b") == 2L))
   }
 
@@ -801,16 +794,6 @@ class OpsSpec extends AnyFunSuite {
         r.getAs[Double]("cosine")).toMap
     assert(pairs.contains((3L, 100L)), s"expected dup pair, got ${pairs.keys.mkString(",")}")
     assert(math.abs(pairs((3L, 100L)) - 1.0) < 1e-12)
-  }
-
-  test("MLlib lsh near-dup variant agrees on the duplicate") {
-    val emb = ((0 until 20).map { i =>
-      (i.toLong, Seq.tabulate(8)(d => ((i * 31 + d * 17) % 23 - 11).toFloat))
-    } :+ (100L, Seq.tabulate(8)(d => ((3 * 31 + d * 17) % 23 - 11).toFloat)))
-      .toDF("vec_id", "embedding")
-    val pairs = graft.ops.Similarity.lshNearDupPairs(emb, maxL2Dist = 0.1)
-      .collect().map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")))
-    assert(pairs.contains((3L, 100L)))
   }
 
   test("LSH metamorphic properties: self at distance 0, duplicate row pairs at 0") {

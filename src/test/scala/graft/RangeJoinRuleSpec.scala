@@ -1,35 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The injected optimizer rule that turns naive inequality range joins
-  * into bucketized equi-joins. Sessions built with GraftExtensions +
-  * the width conf must produce identical results WITHOUT a
-  * BroadcastNestedLoopJoin in the physical plan. */
+  * into bucketized equi-joins. Sessions built with GraftExtensions
+  * (every [[graft.engine.Session]]) + the width conf must produce
+  * identical results WITHOUT a BroadcastNestedLoopJoin in the
+  * physical plan. */
 class RangeJoinRuleSpec extends AnyFunSuite {
 
-  // getOrCreate would reuse the shared test session (ignoring
-  // withExtensions); clear the active/default handles so a fresh
-  // session on the same SparkContext is built WITH the extensions
-  // (same pattern as EngineSpec's extensions test).
-  private lazy val spark: SparkSession = {
-    val prior = SparkTestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-rangejoin-rule")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.engine.GraftExtensions())
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    SparkSession.setActiveSession(prior)
-    SparkSession.setDefaultSession(prior)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private def fixtures(): Unit = {
     import spark.implicits._

@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Relational
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Session()
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -52,4 +52,12 @@ class SelfChecksSpec extends AnyFunSuite {
     // the other checks see a missing dump — must report a crash, not throw
     assert(res("q30_doc_recommend")._1 === false)
   }
+
+  test("escaped detail strings parse back unchanged") {
+    import org.json4s.JString
+    import org.json4s.jackson.JsonMethods
+    val detail = "quote \" backslash \\ tab \t cr \r soh \u0001 end"
+    val parsed = JsonMethods.parse(SelfChecks.toJson(Seq("q\"x" -> (false, detail))))
+    assert(parsed \ "q\"x" \ "detail" === JString(detail))
+  }
 }

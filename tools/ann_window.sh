@@ -11,7 +11,6 @@
 set -euo pipefail
 LABEL="${1:-window}"
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -21,10 +20,9 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-OUT=$(SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="$CPUS" \
+OUT=$(SPARK_GRAFT_SF_DIR="$SF_DIR" \
   SPARK_GRAFT_SCALING_BUDGET="${SPARK_GRAFT_SCALING_BUDGET:-2400}" \
-  java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -Xmx"${SPARK_DRIVER_MEM:-8g}" -cp "$CP" graft.ScalingChild ann \
+  java $OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" -cp "$CP" graft.ScalingChild ann \
   2>/dev/null | grep '^GRAFT_SCALING_FRAGMENT ann ')
 FRAG=$(echo "$OUT" | cut -d' ' -f4-)
 python3 - "$LABEL" "$FRAG" <<'EOF'
