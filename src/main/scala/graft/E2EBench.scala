@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 import graft.engine.Session
 import graft.etl.MoviePipeline
 import graft.ml.Recommender
 import graft.util.Timing
+import graft.Scaling.fixed
 
 /** End-to-end single-node benchmark at the reference's data scale.
   *
@@ -92,11 +95,11 @@ object E2EBench {
     recs.foreach { case (id, r) => println(s"recs($id) = $r") }
 
     val total = genS + pipeS + querS
-    println(
-      s"""{"metric":"e2e_movie_pipeline","rows":$rows,"cleaned_rows":$nClean,""" +
-        s""""gen_s":${f"$genS%.1f"},"pipeline_s":${f"$pipeS%.1f"},""" +
-        s""""queries_s":${f"$querS%.1f"},"total_s":${f"$total%.1f"},""" +
-        s""""reference_e2e_s":817}""")
+    println(compact(render(
+      ("metric" -> "e2e_movie_pipeline") ~ ("rows" -> rows) ~ ("cleaned_rows" -> nClean) ~
+        ("gen_s" -> fixed(genS, 1)) ~ ("pipeline_s" -> fixed(pipeS, 1)) ~
+        ("queries_s" -> fixed(querS, 1)) ~ ("total_s" -> fixed(total, 1)) ~
+        ("reference_e2e_s" -> 817))))
     spark.stop()
   }
 }

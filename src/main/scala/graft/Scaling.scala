@@ -3,6 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
 import graft.engine.{Release, Session}
 
 /** Scaling-curve harness, one section per curve, runnable in-process
@@ -114,28 +118,38 @@ import graft.engine.{Release, Session}
   */
 object Scaling {
 
-  /** 1-minute load average from /proc/loadavg — per-point marker so a
-    * swing is attributable to box contention from the artifact alone. */
+  /** 1-minute load average from /proc/loadavg — recorded per timed
+    * battery pass and per scaling point, so a same-code perf swing can
+    * be attributed to box contention from the artifact alone (rounds
+    * 8→9: identical binaries, q60 0.76 s → 8.9 s median). */
   def loadAvg(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Cumulative hypervisor-steal jiffies (Bench's marker, here per
-    * POINT: loadavg sees only this VM's processes, steal the
-    * neighbors'). */
-  private def stealJiffies(): Long =
+  /** Cumulative hypervisor steal jiffies from /proc/stat (field 9 of
+    * the aggregate cpu line). Loadavg sees only this VM's processes,
+    * steal the neighbors' — round 12 measured identical-code
+    * batteries spreading 80.9 → 126.1 s across one evening while
+    * idle-box steal ran 3.7-6.3% of 32-core capacity. */
+  def stealJiffies(): Long =
     try scala.io.Source.fromFile("/proc/stat").getLines().next()
       .trim.split("\\s+")(8).toLong
     catch { case _: Throwable => -1L }
 
-  /** Steal as % of total vCPU capacity over a point's wall window. */
-  private def stealPct(steal0: Long, wallSec: Double): Double = {
+  /** Steal as % of total vCPU capacity over a wall window (jiffies are
+    * 100 Hz); -1 when /proc/stat was unreadable. */
+  def stealPct(steal0: Long, wallSec: Double): Double = {
     val s1 = stealJiffies()
     if (steal0 < 0 || s1 < 0 || wallSec <= 0) -1.0
     else (s1 - steal0) * 100.0 /
       (wallSec * 100.0 * Runtime.getRuntime.availableProcessors())
   }
+
+  /** `x` as a JSON number rounded half-up to `places` decimals, printed
+    * with exactly that many — the precision every run artifact carries. */
+  def fixed(x: Double, places: Int): JValue =
+    JDecimal(BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP))
 
   val sectionNames: Seq[String] =
     Seq("dedup", "pagerank", "packing", "rank", "inc", "winnow", "sparsesim",
@@ -146,12 +160,12 @@ object Scaling {
     if (section == "dedup") "points"
     else if (section == "inc") "incremental_dedup" else section
 
-  /** Run one section; returns (jsonArrayBody, truncated). Points are
+  /** Run one section; returns (points, truncated). Points are
     * skipped (truncated=true) once `budgetSec` of wall-clock inside
     * this call is spent — a contended box degrades to fewer points
     * instead of blowing the round. */
   def runSection(spark: SparkSession, sfDir: String, section: String,
-      budgetSec: Double): (String, Boolean) = {
+      budgetSec: Double): (JArray, Boolean) = {
     val tStart = System.nanoTime()
     def elapsed = (System.nanoTime() - tStart) / 1e9
     def timed(f: => Long): (Long, Double) = {
@@ -165,7 +179,7 @@ object Scaling {
     // n replicas form a graded near-dup family (replica 0 is the
     // original; sequence() guarded by when — an inverted range
     // throws). concat_ws skips the null perturbation at r=0.
-    def replicate(n: Int) = base
+    def replicate(n: Int, docs: org.apache.spark.sql.DataFrame = base) = docs
       .withColumn("__r", explode(sequence(lit(0), lit(n - 1))))
       .select(
         (col("doc_id") * n + col("__r")).as("doc_id"),
@@ -190,8 +204,21 @@ object Scaling {
             .otherwise(v)).as("embedding"),
         col("label"))
 
-    val points = scala.collection.mutable.ListBuffer.empty[String]
+    val points = scala.collection.mutable.ListBuffer.empty[JObject]
     var truncated = false
+    // one curve point: skipped (truncated) once the budget is spent,
+    // else `measure`'s fields plus the box's load and steal markers
+    // over the point's wall window
+    def point(measure: => JObject): Unit =
+      if (elapsed >= budgetSec) truncated = true
+      else {
+        val la = loadAvg()
+        val s0 = stealJiffies()
+        val pt0 = System.nanoTime()
+        val fields = measure
+        points += fields ~ ("load" -> fixed(la, 1)) ~
+          ("steal_pct" -> fixed(stealPct(s0, (System.nanoTime() - pt0) / 1e9), 2))
+      }
 
     // untimed FULL x1-cell warmup of the section's own workload: in a
     // fresh JVM the first timed point otherwise absorbs Spark's own
@@ -277,10 +304,7 @@ object Scaling {
     section match {
       case "dedup" =>
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (p, tp) = timed(graft.ops.Dedup.minhashPairs(df, shingleSize = 3,
@@ -288,10 +312,11 @@ object Scaling {
             Release.sweep(spark)
             val (f, tf) = timed(graft.ops.Dedup.deduplicate(df, maxJaccardDist = 0.4).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val perK = if (p > 0) tp / (p / 1000.0) else 0.0
-            points += f"""{"x":$x,"docs":$nDocs,"q31_pairs":$p,"q31_sec":$tp%.2f,"q31_sec_per_1k_pairs":$perK%.3f,"q55_survivors":$f,"q55_sec":$tf%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("docs" -> nDocs) ~ ("q31_pairs" -> p) ~ ("q31_sec" -> fixed(tp, 2)) ~
+              ("q31_sec_per_1k_pairs" -> fixed(perK, 3)) ~ ("q55_survivors" -> f) ~
+              ("q55_sec" -> fixed(tf, 2))
+          }
         }
 
       case "pagerank" =>
@@ -318,17 +343,14 @@ object Scaling {
         // decade further: linear-in-edges shape holds iff
         // sec(x30)/sec(x10) ≈ 3 at equal iterations.
         Seq((1, 5), (10, 5), (10, 8), (30, 5)).foreach { case (x, iters) =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val e = if (x == 1) edges1 else edgesX(x)
             val nEdges = e.count()
             val (v, t) = timed(graft.ops.PageRank.ranks(e, iterations = iters).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
-            points += f"""{"x":$x,"iters":$iters,"edges":$nEdges,"vertices":$v,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("iters" -> iters) ~ ("edges" -> nEdges) ~ ("vertices" -> v) ~
+              ("sec" -> fixed(t, 2))
+          }
         }
 
       case "packing" =>
@@ -337,17 +359,13 @@ object Scaling {
         // matters). x30 (round-14 verdict ask #3): the 100× claim for
         // the pipeline-critical prefix-sum previously stopped at x10.
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (spans, t) = timed(graft.ops.Packing.packSequences(df, budget = 256L).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
-            points += f"""{"x":$x,"docs":$nDocs,"span_rows":$spans,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("docs" -> nDocs) ~ ("span_rows" -> spans) ~ ("sec" -> fixed(t, 2))
+          }
         }
 
       case "rank" =>
@@ -359,10 +377,7 @@ object Scaling {
         // construction). x30 (round-12 verdict ask #6): one more
         // decade behind the linearity claim.
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (rows, t) = timed {
@@ -371,9 +386,8 @@ object Scaling {
               graft.ops.Ranks.withQuantileBucket(ranked, "lang", buckets = 10).count()
             }
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
-            points += f"""{"x":$x,"docs":$nDocs,"rows":$rows,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("docs" -> nDocs) ~ ("rows" -> rows) ~ ("sec" -> fixed(t, 2))
+          }
         }
 
       case "winnow" =>
@@ -382,19 +396,16 @@ object Scaling {
         // construction (see the object scaladoc); x30 keeps every
         // fingerprint's df (≈30 per family) under the maxDf=64 cap
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (p, t) = timed(graft.ops.Winnowing.overlapPairs(df,
               k = 3, w = 4, minShared = 2L, maxDf = 64L).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val perK = if (p > 0) t / (p / 1000.0) else 0.0
-            points += f"""{"x":$x,"docs":$nDocs,"pairs":$p,"sec":$t%.2f,"sec_per_1k_pairs":$perK%.3f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("docs" -> nDocs) ~ ("pairs" -> p) ~ ("sec" -> fixed(t, 2)) ~
+              ("sec_per_1k_pairs" -> fixed(perK, 3))
+          }
         }
 
       case "sparsesim" =>
@@ -406,10 +417,7 @@ object Scaling {
         // production posting-cap lever, measured (object scaladoc:
         // fixed absolute cap ⇒ candidate mass ≤ C·Σdf, at most linear)
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (rows, t) = timed(graft.ops.SparseSim.tfidfTopK(df, k = 5).count())
@@ -417,9 +425,10 @@ object Scaling {
             val (rowsC, tC) = timed(
               graft.ops.SparseSim.tfidfTopK(df, k = 5, maxDf = 8L).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
-            points += f"""{"x":$x,"docs":$nDocs,"rows":$rows,"sec":$t%.2f,"capped_maxdf":8,"capped_rows":$rowsC,"capped_sec":$tC%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("docs" -> nDocs) ~ ("rows" -> rows) ~ ("sec" -> fixed(t, 2)) ~
+              ("capped_maxdf" -> 8) ~ ("capped_rows" -> rowsC) ~
+              ("capped_sec" -> fixed(tC, 2))
+          }
         }
 
       case "ann" =>
@@ -432,10 +441,7 @@ object Scaling {
         // item: the per-candidate rate drift at x30 could not say
         // which term owned the overhead).
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) embBase else replicateEmb(x)
             val nVecs = df.count()
             val nCents = math.ceil(math.sqrt(nVecs.toDouble)).toInt
@@ -449,34 +455,27 @@ object Scaling {
             val (rows, t) = timed(graft.ops.Similarity.ivfHardNegatives(df,
               k = 5, nCents = nCents, nProbe = 4).count())
             Release.sweep(spark)
-            // x30 only: the GLOBAL-salted and SELECTIVE-salted
-            // spellings of the SAME mining run (numSalts = 8,
-            // result-identical) beside the unsalted wall. r18
-            // isolated the x30 variance to this join's
-            // contention-sensitive spill; r19 measured global salting
-            // winning under contention (205.5 → 40.4 s) but LOSING
-            // 3.4× in the quietest window (42.8 → 143.8 s: the
-            // unconditional 8× probe fan-out is pure cost when no
-            // cell spills) — so r20 adds the production spelling,
-            // audit-driven selective salting (hot cells only), and
-            // the committed verdict reads all three walls per window
+            // x30 only: the selective-salted spelling of the SAME
+            // mining run (numSalts = 8, result-identical) beside the
+            // unsalted wall. r18 isolated the x30 variance to this
+            // join's contention-sensitive spill; audit-driven salting
+            // of the hot cells only is the production spelling (q223),
+            // and the committed verdict reads both walls per window
             // (multi-window data in ANN_WINDOWS.json).
-            val saltedField =
-              if (x == 30) {
-                val (_, tS) = timed(graft.ops.Similarity.ivfHardNegatives(
-                  df, k = 5, nCents = nCents, nProbe = 4,
-                  numSalts = 8).count())
-                Release.sweep(spark)
-                val (_, tSel) = timed(graft.ops.Similarity.ivfHardNegatives(
-                  df, k = 5, nCents = nCents, nProbe = 4,
-                  numSalts = 8, selectiveSalting = true).count())
-                Release.sweep(spark)
-                f""","salts":8,"salted_sec":$tS%.2f,"selective_sec":$tSel%.2f"""
-              } else ""
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
+            val selectiveSec = Option.when(x == 30) {
+              val (_, tSel) = timed(graft.ops.Similarity.ivfHardNegatives(df, k = 5,
+                nCents = nCents, nProbe = 4, numSalts = 8).count())
+              Release.sweep(spark)
+              tSel
+            }
             val perM = if (candPairs > 0) t / (candPairs / 1e6) else 0.0
-            points += f"""{"x":$x,"vecs":$nVecs,"ncents":$nCents,"nprobe":4,"cand_pairs":$candPairs,"rows":$rows,"assign_sec":$tAssign%.2f,"sec":$t%.2f,"sec_per_1m_cand_pairs":$perM%.3f$saltedField,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("vecs" -> nVecs) ~ ("ncents" -> nCents) ~ ("nprobe" -> 4) ~
+              ("cand_pairs" -> candPairs) ~ ("rows" -> rows) ~
+              ("assign_sec" -> fixed(tAssign, 2)) ~ ("sec" -> fixed(t, 2)) ~
+              ("sec_per_1m_cand_pairs" -> fixed(perM, 3)) ~
+              ("salts" -> selectiveSec.map(_ => 8)) ~
+              ("selective_sec" -> selectiveSec.map(fixed(_, 2)))
+          }
         }
 
       case "adc" =>
@@ -496,13 +495,10 @@ object Scaling {
         // sweep would unpersist a shared checkpoint and its truncated
         // lineage could not recompute.
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
+          point {
             val probes = embBase.orderBy("vec_id").limit(16)
               .select(col("vec_id").as("query_id"), col("embedding"))
               .localCheckpoint(true)
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
             val df = if (x == 1) embBase else replicateEmb(x)
             val nVecs = df.count()
             var books: org.apache.spark.sql.DataFrame = null
@@ -552,12 +548,17 @@ object Scaling {
               graft.ops.Similarity.adcTopKBatchRouted(codesCell, books,
                 cents, probes, k = 10, nProbe = 4).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val candRows = nVecs * 16L
             val perM = if (candRows > 0) t / (candRows / 1e6) else 0.0
             val perMR = if (candRouted > 0) tR / (candRouted / 1e6) else 0.0
-            points += f"""{"x":$x,"vecs":$nVecs,"n_queries":16,"cand_rows":$candRows,"encode_sec":$tEnc%.2f,"rows":$rows,"sec":$t%.2f,"sec_per_1m_cand_rows":$perM%.3f,"ncents":$nCents,"nprobe":4,"route_sec":$tRoute%.2f,"routed_cand_rows":$candRouted,"routed_rows":$rowsR,"routed_sec":$tR%.2f,"routed_sec_per_1m_cand_rows":$perMR%.3f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("vecs" -> nVecs) ~ ("n_queries" -> 16) ~ ("cand_rows" -> candRows) ~
+              ("encode_sec" -> fixed(tEnc, 2)) ~ ("rows" -> rows) ~ ("sec" -> fixed(t, 2)) ~
+              ("sec_per_1m_cand_rows" -> fixed(perM, 3)) ~ ("ncents" -> nCents) ~
+              ("nprobe" -> 4) ~ ("route_sec" -> fixed(tRoute, 2)) ~
+              ("routed_cand_rows" -> candRouted) ~ ("routed_rows" -> rowsR) ~
+              ("routed_sec" -> fixed(tR, 2)) ~
+              ("routed_sec_per_1m_cand_rows" -> fixed(perMR, 3))
+          }
         }
 
       case "backoff" =>
@@ -568,19 +569,15 @@ object Scaling {
         // 5-probe join plan's growth with ~n on both sides, not the
         // backoff hit mix (which this split makes trigram-heavy).
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             val (rows, t) = timed(graft.ops.TextStats.backoffSurprisal(
               df.filter(col("doc_id") % 2 === 1),
               df.filter(col("doc_id") % 2 === 0)).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
-            points += f"""{"x":$x,"docs":$nDocs,"scored_docs":$rows,"sec":$t%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("docs" -> nDocs) ~ ("scored_docs" -> rows) ~ ("sec" -> fixed(t, 2))
+          }
         }
 
       case "lpa" =>
@@ -589,10 +586,7 @@ object Scaling {
         // per-1k-edge rate is the honest number. Edge generation is
         // timed separately from the 4 propagation rounds.
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
+          point {
             val df = if (x == 1) base else replicate(x)
             val nDocs = df.count()
             var pairs: org.apache.spark.sql.DataFrame = null
@@ -605,10 +599,11 @@ object Scaling {
             val (nodes, tLpa) = timed(graft.ops.LabelProp.propagate(
               pairs, rounds = 4, aCol = "doc_a", bCol = "doc_b").count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
             val perK = if (nEdges > 0) tLpa / (nEdges / 1000.0) else 0.0
-            points += f"""{"x":$x,"docs":$nDocs,"edges":$nEdges,"edges_sec":$tEdges%.2f,"nodes":$nodes,"lpa_sec":$tLpa%.2f,"lpa_sec_per_1k_edges":$perK%.3f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("docs" -> nDocs) ~ ("edges" -> nEdges) ~
+              ("edges_sec" -> fixed(tEdges, 2)) ~ ("nodes" -> nodes) ~
+              ("lpa_sec" -> fixed(tLpa, 2)) ~ ("lpa_sec_per_1k_edges" -> fixed(perK, 3))
+          }
         }
 
       case "inc" =>
@@ -622,21 +617,9 @@ object Scaling {
         // growing-corpus evidence the same decade the other curves got.
         val batchSlice = base.filter(col("doc_id") % 10 === 0)
         val corpusSlice = base.filter(col("doc_id") % 10 =!= 0)
-        def corpusX(n: Int) = corpusSlice
-          .withColumn("__r", explode(sequence(lit(0), lit(n - 1))))
-          .select((col("doc_id") * n + col("__r")).as("doc_id"),
-            concat_ws(" ", col("text"),
-              when(col("__r") >= 1,
-                concat_ws(" ", transform(sequence(lit(1), col("__r")),
-                  i => concat(lit("uq"), col("doc_id").cast("string"),
-                    lit("x"), i.cast("string")))))).as("text"),
-            col("lang"))
         Seq(1, 10, 30).foreach { x =>
-          if (elapsed < budgetSec) {
-            val la = loadAvg()
-            val s0 = stealJiffies()
-            val pt0 = System.nanoTime()
-            val c = if (x == 1) corpusSlice else corpusX(x)
+          point {
+            val c = if (x == 1) corpusSlice else replicate(x, corpusSlice)
             val nCorpus = c.count()
             var idx: graft.ops.Dedup.CorpusDedupIndex = null
             val (_, tIdx) = timed {
@@ -649,15 +632,16 @@ object Scaling {
             val (surv, tf) = timed(graft.ops.Dedup.deduplicate(
               c.unionByName(batchSlice), maxJaccardDist = 0.4).count())
             Release.sweep(spark)
-            val sp = stealPct(s0, (System.nanoTime() - pt0) / 1e9)
-            points += f"""{"x":$x,"corpus":$nCorpus,"index_sec":$tIdx%.2f,"admitted":$adm,"inc_sec":$ti%.2f,"full_survivors":$surv,"full_sec":$tf%.2f,"load":$la%.1f,"steal_pct":$sp%.2f}"""
-          } else truncated = true
+            ("x" -> x) ~ ("corpus" -> nCorpus) ~ ("index_sec" -> fixed(tIdx, 2)) ~
+              ("admitted" -> adm) ~ ("inc_sec" -> fixed(ti, 2)) ~ ("full_survivors" -> surv) ~
+              ("full_sec" -> fixed(tf, 2))
+          }
         }
 
       case other =>
         throw new IllegalArgumentException(s"unknown scaling section: $other")
     }
-    (points.mkString("[", ",", "]"), truncated)
+    (JArray(points.toList), truncated)
   }
 }
 
@@ -665,8 +649,9 @@ object Scaling {
   *
   * Forked by [[Bench]] with the parent's exact classpath and JVM
   * flags; prints exactly one machine line to stdout —
-  * `GRAFT_SCALING_FRAGMENT <section> <truncated> <jsonArray>` — which
-  * the parent splices into bench.json's "scaling" object. Everything
+  * `GRAFT_SCALING_FRAGMENT <section> <truncated> <jsonArray>` (the
+  * points array rendered compact, so on one line) — which the parent
+  * parses into bench.json's "scaling" object. Everything
   * else (Spark chatter) goes to stderr or is suppressed at ERROR
   * level, and the parent consumes this stdout privately (it never
   * reaches the driver's tail capture).
@@ -683,7 +668,7 @@ object ScalingChild {
     Bench.warmUp(spark, sfDir)
     val (json, truncated) = Scaling.runSection(spark, sfDir, section, budget)
     spark.stop()
-    println(s"GRAFT_SCALING_FRAGMENT $section $truncated $json")
+    println(s"GRAFT_SCALING_FRAGMENT $section $truncated ${compact(render(json))}")
     System.out.flush()
   }
 }

@@ -5,8 +5,11 @@ import scala.collection.mutable.ListBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import org.json4s.JObject
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
 import graft.engine.Tables
-import graft.util.Json
 
 /** Verify-time invariant checks for the queries whose row SELECTION no
   * SQL oracle can re-derive (seeded MLlib fits, LSH recall, sketch
@@ -41,9 +44,9 @@ object SelfChecks {
   }
 
   def toJson(results: Seq[(String, (Boolean, String))]): String =
-    results.map { case (name, (pass, detail)) =>
-      s"""${Json.quote(name)}: {"pass": $pass, "detail": ${Json.quote(detail)}}"""
-    }.mkString("{", ", ", "}")
+    compact(render(JObject(results.map { case (name, (pass, detail)) =>
+      name -> (("pass" -> pass) ~ ("detail" -> detail))
+    }.toList)))
 
   private def out(spark: SparkSession, outDir: String, name: String): DataFrame =
     spark.read.parquet(s"$outDir/$name")

@@ -2,10 +2,14 @@ package graft
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, JObject}
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 import graft.engine.{Session, Tables}
 import graft.ops.{Chunking, Classifier, Dedup, Packing, Splits, TextStats}
 import graft.util.Timing
+import graft.Scaling.fixed
 
 /** End-to-end training-data pipeline over the documents corpus — the
   * LLM-data-prep shape this engine adds beyond the reference:
@@ -137,19 +141,21 @@ object TrainDataBench {
     val minEpochs = epochs.map(_.getLong(4)).minOption.getOrElse(0L)
 
     val splitCounts = spark.read.parquet(out).groupBy("split").count()
-      .collect().map(r => s""""${r.getString(0)}":${r.getLong(1)}""").sorted
-      .mkString("{", ",", "}")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val total = capS + dedupS + qualS + chunkS + packS + writeS + shardS + epochS
-    println(
-      s"""{"metric":"traindata_pipeline","raw_docs":$nRaw,"after_cap":$nCapped,""" +
-        s""""after_dedup":$nKept,""" +
-        s""""after_quality":$nGated,"chunks":$nChunks,"splits":$splitCounts,""" +
-        s""""train_pack_rows":$nPackRows,"train_seqs":$nSeqs,""" +
-        s""""train_shards":$nShards,"shard_tokens":$shardTokens,""" +
-        s""""epoch_sources":${epochs.length},"epochs_x1000_min":$minEpochs,"epochs_x1000_max":$maxEpochs,""" +
-        s""""cap_s":${f"$capS%.1f"},"dedup_s":${f"$dedupS%.1f"},"quality_s":${f"$qualS%.1f"},""" +
-        s""""chunk_s":${f"$chunkS%.1f"},"pack_s":${f"$packS%.1f"},""" +
-        s""""write_s":${f"$writeS%.1f"},"shard_s":${f"$shardS%.1f"},"epoch_s":${f"$epochS%.1f"},"total_s":${f"$total%.1f"}}""")
+    println(compact(render(
+      ("metric" -> "traindata_pipeline") ~ ("raw_docs" -> nRaw) ~ ("after_cap" -> nCapped) ~
+        ("after_dedup" -> nKept) ~ ("after_quality" -> nGated) ~ ("chunks" -> nChunks) ~
+        ("splits" -> JObject(splitCounts.map { case (k, n) => k -> JInt(n) }.toList)) ~
+        ("train_pack_rows" -> nPackRows) ~ ("train_seqs" -> nSeqs) ~
+        ("train_shards" -> nShards) ~ ("shard_tokens" -> shardTokens) ~
+        ("epoch_sources" -> epochs.length) ~ ("epochs_x1000_min" -> minEpochs) ~
+        ("epochs_x1000_max" -> maxEpochs) ~
+        ("cap_s" -> fixed(capS, 1)) ~ ("dedup_s" -> fixed(dedupS, 1)) ~
+        ("quality_s" -> fixed(qualS, 1)) ~ ("chunk_s" -> fixed(chunkS, 1)) ~
+        ("pack_s" -> fixed(packS, 1)) ~ ("write_s" -> fixed(writeS, 1)) ~
+        ("shard_s" -> fixed(shardS, 1)) ~ ("epoch_s" -> fixed(epochS, 1)) ~
+        ("total_s" -> fixed(total, 1)))))
     spark.stop()
   }
 }

@@ -986,7 +986,7 @@ object Similarity {
       nCents: Int = 16, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label", quantScale: Double = 1e4,
-      numSalts: Int = 1, selectiveSalting: Boolean = false): DataFrame = {
+      numSalts: Int = 1): DataFrame = {
     require(k >= 1 && nCents >= 1 && nProbe >= 1 && nProbe <= nCents)
     require(numSalts >= 1)
     def qdist(a: Column, b: Column): Column =
@@ -1014,46 +1014,42 @@ object Similarity {
       col("__lab").as("__clab"), col("__v").as("__cv2"),
       col("__cell").as("__ccell"))
     // numSalts > 1 points the engine's own skew lever (SkewJoin, q81)
-    // at this join: the r18 ann curve isolated the x30 mining
-    // variance to THIS cell-keyed join's contention-sensitive spill —
-    // salting shards a cell's candidates numSalts ways (hash of
-    // the candidate id) and replicates the probe rows across shards,
-    // so a hot cell's pair stream splits into numSalts smaller tasks
+    // at this join's HOT cells: the r18 ann curve isolated the x30
+    // mining variance to THIS cell-keyed join's contention-sensitive
+    // spill — salting shards a hot cell's candidates numSalts ways
+    // (hash of the candidate id) and replicates its probe rows across
+    // shards, so its pair stream splits into numSalts smaller tasks
     // instead of one spilling one. Result-identical by construction
     // (every (probe, cand) pair meets in exactly one shard — the
     // spec pins it); the pair VOLUME is unchanged, only its packing.
     //
-    // selectiveSalting applies the lever where it pays and ONLY
-    // there: round 19 measured the GLOBAL spelling (every cell's
-    // probe rows replicated 8×) winning 2.4–5.1× under contention
-    // but LOSING 3.4× in the round's quietest window (unsalted
-    // 42.8 s vs salted 143.8 s) — an unconditional numSalts× probe
-    // fan-out is a self-inflicted shuffle multiplier when no cell is
-    // hot, exactly the case SkewJoin's own scaladoc warns about.
-    // The selective spelling runs the q136 [[SkewJoin.skewKeyAudit]]
-    // over the candidate cells first (one map-side-combined count to
-    // ≤ nCents rows — a bounded collect by contract), routes the
-    // HOT cells (> 1.2× the mean cell population) through the salted
-    // join and the cold cells through the plain join, and unions the
-    // two pair streams: each (probe, cand) pair still meets exactly
-    // once, on whichever side its candidate's cell landed.
+    // Only the hot cells: round 19 measured salting EVERY cell
+    // winning 2.4–5.1× under contention but LOSING 3.4× in the
+    // round's quietest window (unsalted 42.8 s vs salted 143.8 s) —
+    // an unconditional numSalts× probe fan-out is a self-inflicted
+    // shuffle multiplier when no cell is hot, exactly the case
+    // SkewJoin's own scaladoc warns about. So the q136
+    // [[SkewJoin.skewKeyAudit]] runs over the candidate cells first
+    // (one map-side-combined count to ≤ nCents rows — a bounded
+    // collect by contract), the HOT cells (> 1.2× the mean cell
+    // population) go through the salted join and the cold cells
+    // through the plain join, and the two pair streams union: each
+    // (probe, cand) pair still meets exactly once, on whichever side
+    // its candidate's cell landed.
     def pairCols(df: DataFrame): DataFrame =
       df.filter(col("__qlab") =!= col("__clab"))
         .select(col("__qid"), col("__qv"), col("__cand"), col("__cv2"))
     val joined =
       if (numSalts <= 1)
         pairCols(queries.join(cands, col("__pcell") === col("__ccell")))
-      else if (!selectiveSalting)
-        pairCols(SkewJoin.saltedInnerJoin(cands, queries, "__ccell",
-          "__pcell", numSalts, Seq("__cand")))
       else {
         // NOTE eager execution: the audit runs Spark jobs at
         // DataFrame-CONSTRUCTION time (skewKeyAudit's internal
-        // localCheckpoint + this bounded ≤ nCents collect) — callers
-        // of the selective spelling get driver-side work here, not a
-        // pure lazy plan-builder. The audit's checkpoint blocks are
-        // released as soon as the verdict is collected (below), so
-        // repeated selective calls outside Bench's post-query sweep
+        // localCheckpoint + this bounded ≤ nCents collect) — salted
+        // callers get driver-side work here, not a pure lazy
+        // plan-builder. The audit's checkpoint blocks are released
+        // as soon as the verdict is collected (below), so repeated
+        // salted calls outside Bench's post-query sweep
         // do not accumulate pinned RDDs (round-20 ADVICE).
         val audit = SkewJoin.skewKeyAudit(cands.select(col("__ccell")),
           "__ccell").select(col("__ccell"))

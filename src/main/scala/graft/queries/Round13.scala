@@ -64,7 +64,13 @@ object Round13 {
 
   /** One q87-style admission replay (exact layer → cross near-dup
     * layer → within-batch recursive-CTE clustering), CTE names
-    * suffixed so two rounds compose in one WITH RECURSIVE. */
+    * suffixed so two rounds compose in one WITH RECURSIVE.
+    *
+    * `edges_` is `AS MATERIALIZED`: DuckDB 1.0 inlines CTEs at every
+    * reference, so the recursive `reach_` otherwise re-evaluates
+    * `edges_` (and `pairs_` twice under it) on every iteration — at
+    * sf0.01 that ran out of memory under 3 GB, pinned it returns the
+    * same rows in seconds (the trap [[bpeChainCtes]] pins too). */
   private def admitRound(sfx: String, batch: String, corpus: String): String = {
     val jac = (a: String, b: String) =>
       s"""1.0 - (CAST(len(list_intersect($a.g, $b.g)) AS DOUBLE)
@@ -104,7 +110,7 @@ object Round13 {
        |  FROM k2g_$sfx a JOIN k2g_$sfx b ON a.doc_id < b.doc_id
        |  WHERE ${jac("a", "b")} <= 0.4
        |),
-       |edges_$sfx AS (
+       |edges_$sfx AS MATERIALIZED (
        |  SELECT doc_a AS s, doc_b AS d FROM pairs_$sfx
        |  UNION ALL SELECT doc_b, doc_a FROM pairs_$sfx
        |),

@@ -383,26 +383,26 @@ object Round19 {
 
   // ---------------------------------------------------------------- q223
   /** SELECTIVELY SALTED ANN candidate join ([[graft.ops.Similarity
-    * .ivfHardNegatives]] at numSalts = 8, selectiveSalting = true):
+    * .ivfHardNegatives]] at numSalts = 8):
     * the r18 ann curve isolated the x30 mining variance to the
     * cell-keyed candidate join's contention-sensitive spill; numSalts
     * points the engine's own skew lever (q81's
     * [[graft.ops.SkewJoin]]) at it — a hot cell's candidates shard by
     * candidate-id hash, its probe rows replicate across shards, every
     * (probe, candidate) pair meets in exactly one shard. Round 19
-    * measured the GLOBAL spelling winning under contention but losing
+    * measured salting every cell winning under contention but losing
     * 3.4× in the quietest window (the unconditional 8× probe fan-out
-    * is pure overhead when no cell is hot), so the battery now runs
-    * the production spelling: the q136 skew audit first, salting ONLY
-    * the cells it flags, plain join for the rest, union. Every
-    * spelling is result-identical BY CONSTRUCTION, and this query
-    * holds the selective plan to the SAME oracle the unsalted miner
+    * is pure overhead when no cell is hot), so the operator runs the
+    * q136 skew audit first, salting ONLY the cells it flags, plain
+    * join for the rest, union. Salted and unsalted are
+    * result-identical BY CONSTRUCTION, and this query holds the
+    * selective plan to the SAME oracle the unsalted miner
     * answers to (the q182 replay: seeded centroids, integer
     * assignment, probes, cross-label distances, per-query top-k) —
     * the packing changed, the answer must not. */
   private def q223(s: SparkSession, dir: String): DataFrame =
     Similarity.ivfHardNegatives(Tables.embeddings(s, dir), k = 5,
-      nCents = 16, nProbe = 4, numSalts = 8, selectiveSalting = true)
+      nCents = 16, nProbe = 4, numSalts = 8)
 
   private val q223Sql =
     s"""WITH

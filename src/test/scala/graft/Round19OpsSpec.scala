@@ -245,19 +245,4 @@ class Round19OpsSpec extends AnyFunSuite {
       }
     }
   }
-
-  // ------------------------ q223 salted ANN candidate join
-  test("ivfHardNegatives: salted join is result-identical to the unsalted join") {
-    import graft.ops.Similarity
-    val rnd = new scala.util.Random(61)
-    val emb = (0L until 40L).map(i =>
-      (i, Array.fill(8)(rnd.nextFloat()), i % 3)).toDF(
-      "vec_id", "embedding", "label")
-    val plain = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
-      nProbe = 2).as[(Long, Long, Long, Long)].collect().toSeq
-    val salted = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
-      nProbe = 2, numSalts = 8).as[(Long, Long, Long, Long)]
-      .collect().toSeq
-    assert(plain === salted)
-  }
 }

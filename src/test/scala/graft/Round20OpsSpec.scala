@@ -8,7 +8,7 @@ class Round20OpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   // ------------------------ selective salting (ann miner)
-  test("ivfHardNegatives: selective salting equals global salting equals unsalted on a hot-cell corpus") {
+  test("ivfHardNegatives: selective salting equals unsalted on a hot-cell corpus") {
     import graft.ops.Similarity
     val rnd = new scala.util.Random(79)
     // 30 of 40 vectors are IDENTICAL (several seeded centroids land
@@ -30,13 +30,9 @@ class Round20OpsSpec extends AnyFunSuite {
     assert(hot >= 1, "test corpus failed to produce a hot cell")
     val plain = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
       nProbe = 2).as[(Long, Long, Long, Long)].collect().toSeq
-    val global = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
+    val selective = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
       nProbe = 2, numSalts = 8).as[(Long, Long, Long, Long)]
       .collect().toSeq
-    val selective = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
-      nProbe = 2, numSalts = 8, selectiveSalting = true)
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    assert(plain === global)
     assert(plain === selective)
   }
 
@@ -49,8 +45,8 @@ class Round20OpsSpec extends AnyFunSuite {
     val plain = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
       nProbe = 2).as[(Long, Long, Long, Long)].collect().toSeq
     val selective = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
-      nProbe = 2, numSalts = 8, selectiveSalting = true)
-      .as[(Long, Long, Long, Long)].collect().toSeq
+      nProbe = 2, numSalts = 8).as[(Long, Long, Long, Long)]
+      .collect().toSeq
     assert(plain === selective)
   }
 

@@ -87,7 +87,7 @@ class Round21OpsSpec extends AnyFunSuite {
       .foreach(_.unpersist(blocking = true))
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val negs = Similarity.ivfHardNegatives(emb, k = 3, nCents = 4,
-      nProbe = 2, numSalts = 4, selectiveSalting = true)
+      nProbe = 2, numSalts = 4)
     // at CONSTRUCTION time the audit has run and released its counts
     // checkpoint; only the routed frame's contract-pinned blocks (the
     // result plan still references them) may be registered
@@ -99,7 +99,7 @@ class Round21OpsSpec extends AnyFunSuite {
     // accumulation shape: each call may pin only its own routed frame
     val perCall = (1 to 3).map { _ =>
       Similarity.ivfHardNegatives(emb, k = 3, nCents = 4, nProbe = 2,
-        numSalts = 4, selectiveSalting = true)
+        numSalts = 4)
       spark.sparkContext.getPersistentRDDs.keySet.size
     }
     // 1 routed checkpoint per live call is the documented contract;

@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # One measurement WINDOW of the ann scaling curve (fresh JVM, the
-# exact ScalingChild fork graft.Bench uses), with the x30 cell's three
-# mining spellings (unsalted / global-salted / selective-salted)
-# appended as a data row to ANN_WINDOWS.json — the round-19 verdict's
+# exact ScalingChild fork graft.Bench uses), with the x30 cell's two
+# mining spellings (unsalted / selective-salted) appended as a data row
+# to ANN_WINDOWS.json (older rows also carry the retired global-salted
+# wall, `salted_sec`) — the round-19 verdict's
 # ask #4: commit multi-window measurements as DATA, not prose, so a
 # narrative can never again quote the most favorable window.
 #
@@ -34,7 +35,7 @@ if not x30:
     sys.exit("no x30 point in fragment (budget truncated?)")
 p = x30[0]
 row = {"label": label,
-       "unsalted_sec": p["sec"], "salted_sec": p.get("salted_sec"),
+       "unsalted_sec": p["sec"],
        "selective_sec": p.get("selective_sec"), "salts": p.get("salts"),
        "assign_sec": p["assign_sec"], "cand_pairs": p["cand_pairs"],
        "load": p["load"], "steal_pct": p["steal_pct"]}
